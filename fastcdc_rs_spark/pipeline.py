@@ -21,6 +21,7 @@ Unit-hash modes:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import ClassVar
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -62,15 +63,6 @@ class DedupConfig:
     # verification + skew
     threshold: float = 0.6
     bucket_cap: int = 64
-    # a-side pair-degree above which a hub doc's shingle array is
-    # broadcast to its pairs instead of shuffled per pair (star pairs
-    # from capped buckets all share a = bucket_min); None disables
-    verify_hub_cap: int | None = 256
-    # hub PAIR shape ladder (see operators/verify.py): double-broadcast
-    # at or under bcast_max; b-shuffle against a broadcast-b-id-filtered
-    # array side up to bids_bcast_max; unfiltered b-shuffle above
-    verify_hub_pair_bcast_max: int = 64_000
-    verify_hub_bids_bcast_max: int = 4_000_000
     # ride the per-doc set size through the band shuffle so the verify
     # size-ratio prune is a row filter instead of two narrow joins.
     # Default OFF: measured at 800k docs/4 cores the fold costs ~25% of
@@ -83,6 +75,11 @@ class DedupConfig:
     # joins' AQE barriers cost more than local exchange bytes, the fold
     # may win — measure there before flipping.
     size_fold: bool = False
+    # Retired with operators/verify.py's hub ladder: class constants, not
+    # fields (they set nothing), kept readable for perfbench/ callers.
+    verify_hub_cap: ClassVar[None] = None
+    verify_hub_pair_bcast_max: ClassVar[None] = None
+    verify_hub_bids_bcast_max: ClassVar[None] = None
 
     def chunker(self) -> ChunkerConfig:
         return ChunkerConfig(
@@ -231,14 +228,7 @@ def near_dup_clusters(
         )
         pairs._graft_caches = caches
     shingled = signed.select(id_col, "shingles")
-    verified = verify_pairs(
-        pairs, shingled, threshold=cfg.threshold, id_col=id_col,
-        hub_degree_cap=cfg.verify_hub_cap,
-        hub_pair_bcast_max=cfg.verify_hub_pair_bcast_max,
-        hub_bids_bcast_max=cfg.verify_hub_bids_bcast_max,
-    )
-    # capture before observe/persist wrap (instance attrs don't survive)
-    verify_caches = getattr(verified, "_graft_caches", [])
+    verified = verify_pairs(pairs, shingled, threshold=cfg.threshold, id_col=id_col)
     if collect_metrics:
         from pyspark.sql import Observation
 
@@ -289,8 +279,6 @@ def near_dup_clusters(
         release_caches(pairs, signed)
     else:
         release_caches(pairs, signed, units)
-    for c in verify_caches:
-        c.unpersist()
     return clusters, verified, metrics
 
 

@@ -69,17 +69,11 @@ def run_dedup_job(spark, inp: str, out: str, cfg: DedupConfig,
     pairs = run.stage("pairs", lambda: pairs_df)
     m = metrics.first().asDict()  # consume bucket stats before the release
     release_caches(pairs_df)      # run.stage materialized the pairs
-    verify_caches: list = []
-
-    def _verified():
-        v = verify_pairs(pairs, signed.select(id_col, "shingles"),
-                         threshold=cfg.threshold, id_col=id_col,
-                         hub_degree_cap=cfg.verify_hub_cap)
-        verify_caches.extend(getattr(v, "_graft_caches", []))
-        return v
-
-    verified = run.stage("verified", _verified)
-    release_caches(*verify_caches)  # run.stage materialized the pairs
+    verified = run.stage(
+        "verified",
+        lambda: verify_pairs(pairs, signed.select(id_col, "shingles"),
+                             threshold=cfg.threshold, id_col=id_col),
+    )
     clusters = run.stage(
         "clusters",
         lambda: connected_components(verified, vertices=docs.select(id_col), id_col=id_col),

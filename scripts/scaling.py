@@ -204,35 +204,40 @@ def _oracle_counts() -> str:
 # the kernel or correctness story changes). {COUNTS} is filled from the
 # live driver contract by _oracle_counts().
 _STATIC_TAIL = """
-## Verify-stage shuffle bytes: hub split measurements (round 4)
+## Verify-stage shuffle bytes: the hub split, measured and retired
 
-Star pairs from capped buckets share `a = bucket_min`; verify_pairs'
-`hub_degree_cap` routes high-degree `a` keys through broadcasts so a hub
-doc's shingle array never enters an exchange. Measured via the status
-REST API (sum of stage shuffleWriteBytes across the verify query, 800k
-docs, 4 cores): plain wide join 159.3 MB; the FINAL hub plan 159.1 MB
-(row-identical output) — bytes-neutral here because hub pairs are ~2%
-of survivors after the size-ratio prefilter. In a constructed hub-heavy
-regime (100k star pairs on one hub, 2 KB arrays): plain 194.3 MB, hub
-plan 180.5 MB. Two intermediate shapes were measured and REJECTED:
-branching below the array join re-evaluates the join subtree per branch
-(pushed _deg predicates defeat exchange reuse): 222 MB at 800k; a
-branch-free left-join+coalesce forces the b-array stream through an
-extra a-exchange: 375 MB hub-heavy. The mechanism's payoff grows with
-array size and hub degree (a 10^8-member bucket at CC scale); at
-sandbox scale it is deliberately a config knob (default on, ~1 s of
-broadcast latency).
+Star pairs from capped buckets share `a = bucket_min`. From round 4 to
+round 7, verify_pairs split them off by a-side pair-degree (a count
+window over `a`, one eager hub-pair count, broadcast hub branches and
+a union) so a hub doc's shingle array never entered an exchange.
+Measured via the status REST API (sum of stage shuffleWriteBytes across
+the verify query, 4 cores), it saved 0.1% at 800k docs: plain wide
+join 159.3 MB, hub plan 159.1 MB (row-identical output; hub pairs were
+~2% of survivors after the size-ratio prefilter). In a constructed
+hub-heavy regime (100k star pairs on one hub, 2 KB arrays) it saved
+7%: plain 194.3 MB, hub plan 180.5 MB. Its window, count and broadcast
+barriers cost ~1 s of latency per run.
 
-Round 5 bounded the one unbounded piece (round-4 ADVICE): hub PAIR rows
-were broadcast too, and |pairs|/cap bounds hub docs, not hub pairs — a
-10^8-pair star would ride a ~GB pair broadcast in exactly the regime
-the split targets. One cache-scan count on the persisted narrow table
-now decides the shape: zero hub pairs skips the union branch (and both
-broadcast barriers) entirely; at or under `hub_pair_bcast_max` (4M
-three-long rows) the measured-optimal double broadcast runs; above it
-the narrow hub pairs shuffle on `b` (one extra bounded, spillable
-b-exchange for the array table instead of an unbounded broadcast). All
-three shapes pinned row-identical (tests/test_operators_misc.py).
+The split is deleted. Verify is now one lazy plan: size-ratio prune,
+then `pairs ⋈ shingles` on `a`, then on `b`, then exact Jaccard. Skew
+stays handled without a plan of its own:
+- only `a` can be hot: bucket capping bounds a doc's degree as `b` at
+  `bands × (bucket_cap − 1)`, while star hubs on `a` are unbounded;
+- a hot `a` skews only the narrow side of the a-first join (three-long
+  pair rows), which AQE's skew-join split handles; the joined rows are
+  then exchanged on `b`, which spreads them evenly.
+Rows under forced shuffle joins (broadcasts off) equal the default
+plan's on a corpus whose giant cluster overflows the bucket cap
+(tests/test_pipeline_e2e.py).
+
+Measured when the split was retired (`perfbench/run.py --trace 0`,
+4-core shared host, ten parent/change pairs on seeds 11-20, alternating
+which side ran first): `pipeline_mixed` (12k docs) `wall_s` median
+5.28 s (quartiles 5.03-5.73) -> 3.61 s (3.46-4.01), 0.68x, faster in
+10 of 10 pairs; `pipeline_unique` (no seeded duplicates) 3.54 -> 3.38 s
+over six pairs, within noise. A traced run (seed 11): `verify.jobs`
+14 -> 7 and `verify.stage_s` 1.81 -> 0.86 s, with candidate pairs
+(4316) and verified edges (3987) unchanged.
 
 ## Pure-shuffle scaling probe (round 4 — what the host itself can do)
 

@@ -1372,15 +1372,15 @@ def test_bmp_corrupt_inputs_and_image_op(spark):
     assert r.features[-1] == 1.0                 # all pixels in top bin
 
 
-def test_verify_pairs_hub_split_plan_and_equivalence(spark):
-    # Degree-aware verify: star pairs sharing a hub `a` take a broadcast
-    # path above hub_degree_cap. Pure physical-plan choice — results must
-    # be IDENTICAL to the unsplit wide join, the hub branch must plan a
-    # broadcast join, and the narrow persisted table must be released
-    # through _graft_caches.
+def test_verify_pairs_star_pairs_exact_and_lazy(spark):
+    # Star pairs from a capped bucket all share one hub `a`; verify
+    # joins them in the same single shape as every other pair: rows
+    # equal an exact Jaccard computed in Python, the plan holds no
+    # degree Window and no Union, and building the result runs no job.
     import numpy as np
 
     from fastcdc_rs_spark.operators.verify import verify_pairs
+    from fastcdc_rs_spark.plans import executed_plan
 
     rng = np.random.default_rng(5)
     base = list(range(1000, 1040))
@@ -1396,50 +1396,27 @@ def test_verify_pairs_hub_split_plan_and_equivalence(spark):
     )
     pairs = spark.createDataFrame(pairs_rows, "a long, b long")
 
-    split = verify_pairs(pairs, shingled, threshold=0.6, hub_degree_cap=4)
-    plan = split._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-    got_split = {(r.a, r.b): round(r.jaccard, 9) for r in split.collect()}
-    plain = verify_pairs(pairs, shingled, threshold=0.6, hub_degree_cap=None)
-    got_plain = {(r.a, r.b): round(r.jaccard, 9) for r in plain.collect()}
-    assert got_split == got_plain and len(got_split) > 20
+    sc = spark.sparkContext
+    group = "verify-pairs-lazy"
+    sc.setJobGroup(group, group)
+    try:
+        verified = verify_pairs(pairs, shingled, threshold=0.6)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not hasattr(verified, "_graft_caches")
 
-    caches = split._graft_caches
-    assert len(caches) == 1 and caches[0].storageLevel.useMemory
-    from fastcdc_rs_spark.cache import release_caches
+    want = {}
+    for a, b in pairs_rows:
+        sa, sb = set(sets[a]), set(sets[b])
+        j = len(sa & sb) / len(sa | sb)
+        if j >= 0.6:
+            want[(a, b)] = round(j, 9)
+    got = {(r.a, r.b): round(r.jaccard, 9) for r in verified.collect()}
+    assert got == want and len(got) > 20
 
-    release_caches(split)
-    assert not caches[0].storageLevel.useMemory
-
-    # Round-5 ADVICE: the hub PAIR broadcast is bounded — above
-    # hub_pair_bcast_max the narrow hub pairs must take a shuffle join
-    # instead (the broadcast grew linearly with hub degree). Forcing the
-    # bounds down exercises the b-id-filtered shuffle rung and the
-    # unfiltered rung; rows stay identical on every rung.
-    shuffled = verify_pairs(pairs, shingled, threshold=0.6,
-                            hub_degree_cap=4, hub_pair_bcast_max=0)
-    got_shuffled = {(r.a, r.b): round(r.jaccard, 9)
-                    for r in shuffled.collect()}
-    assert got_shuffled == got_plain
-    release_caches(shuffled)
-
-    unfiltered = verify_pairs(pairs, shingled, threshold=0.6,
-                              hub_degree_cap=4, hub_pair_bcast_max=0,
-                              hub_bids_bcast_max=0)
-    got_unfiltered = {(r.a, r.b): round(r.jaccard, 9)
-                      for r in unfiltered.collect()}
-    assert got_unfiltered == got_plain
-    release_caches(unfiltered)
-
-    # zero hub pairs: the split collapses to the plain wide join (no
-    # union branch, no broadcast barriers) — rows still identical
-    nohub = verify_pairs(pairs, shingled, threshold=0.6,
-                         hub_degree_cap=10_000)
-    got_nohub = {(r.a, r.b): round(r.jaccard, 9) for r in nohub.collect()}
-    assert got_nohub == got_plain
-    plan_nohub = nohub._jdf.queryExecution().executedPlan().toString()
-    assert "Union" not in plan_nohub
-    release_caches(nohub)
+    plan = executed_plan(verified)
+    assert "Window" not in plan and "Union" not in plan
 
 
 def test_cc_driver_path_equals_loop(spark):
@@ -2669,9 +2646,8 @@ def test_candidate_pairs_size_fold_and_filter_prune(spark):
 
     # folded prune == join prune, and the folded plan has 2 joins
     # (the array joins), the fallback 4 (arrays + two size joins)
-    folded = verify_pairs(pairs, shingled, threshold=0.5, hub_degree_cap=None)
-    joined = verify_pairs(pairs.select("a", "b"), shingled, threshold=0.5,
-                          hub_degree_cap=None)
+    folded = verify_pairs(pairs, shingled, threshold=0.5)
+    joined = verify_pairs(pairs.select("a", "b"), shingled, threshold=0.5)
     got_f = {(r.a, r.b): round(r.jaccard, 9) for r in folded.collect()}
     got_j = {(r.a, r.b): round(r.jaccard, 9) for r in joined.collect()}
     assert got_f == got_j

@@ -10,6 +10,8 @@ controls don't, the giant skew cluster is recovered whole).
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 
 from fastcdc_rs_spark.corpus import corpus_pandas
@@ -103,6 +105,40 @@ def test_near_clusters_recovered(spark_results, corpus):
     )
     total = near.true_cluster.nunique()
     assert whole / total >= 0.75, f"only {whole}/{total} near clusters recovered"
+
+
+def test_star_hub_rows_invariant_under_shuffle_joins(spark, corpus):
+    # The giant cluster overflows bucket_cap, so its capped buckets emit
+    # star pairs that all share one hub `a`. With broadcasts disabled
+    # every join is a shuffle join (AQE skew-join splits the hub's rows);
+    # clusters and verified pairs must equal the session default's.
+    from fastcdc_rs_spark.cache import release_caches
+    from fastcdc_rs_spark.plans import executed_plan
+
+    cfg = DedupConfig(bucket_cap=8)
+    assert (corpus.dup_kind == "giant").sum() > cfg.bucket_cap
+    docs = spark.createDataFrame(corpus[["doc_id", "text"]])
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    def run():
+        clusters, verified, _ = near_dup_clusters(docs, cfg)
+        cl = {r.doc_id: r.cluster_id for r in clusters.collect()}
+        pairs = {(r.a, r.b) for r in verified.collect()}
+        plan = executed_plan(verified)
+        release_caches(verified)
+        return cl, pairs, plan
+
+    default = run()
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        forced = run()
+    finally:
+        spark.conf.set(key, saved)
+    assert "BroadcastHashJoin" not in forced[2] and "SortMergeJoin" in forced[2]
+    assert forced[:2] == default[:2]
+    hub_degree = Counter(a for a, _ in default[1])
+    assert max(hub_degree.values()) >= cfg.bucket_cap
 
 
 def test_simhash_candidate_mode(spark, corpus):
